@@ -704,11 +704,12 @@ package object dedup {
       maxIter: Int = 25, driverSolveMaxEdges: Long = 1L << 20): DataFrame = {
     // checkpoint the edge computation FIRST: the symmetrizing union has the
     // edge plan as both branches, so an un-checkpointed (possibly expensive)
-    // pair pipeline would be evaluated twice — and then once more per round
-    val e = edges.select(col(srcCol).cast("long").as("a"),
-      col(dstCol).cast("long").as("b")).localCheckpoint()
-    if (e.count() <= driverSolveMaxEdges) return ccDriver(e)
-    ccDistributed(e, maxIter)._1.select(col("v").as("id"), col("l").as("rep"))
+    // pair pipeline would be evaluated twice — and then once more per
+    // round. The pin also counts the edges for the driver-solve gate.
+    val e = graft.core.Broadcasts.pin(edges.select(col(srcCol).cast("long").as("a"),
+      col(dstCol).cast("long").as("b")))
+    if (e.rows <= driverSolveMaxEdges) return ccDriver(e.df)
+    ccDistributed(e.df, maxIter)._1.select(col("v").as("id"), col("l").as("rep"))
   }
 
   /** Distributed CC loop on a checkpointed (a, b) edge frame; returns the
@@ -724,10 +725,15 @@ package object dedup {
     * 0.4 s rounds exploding to 200 s by round 15; one driver thread busy,
     * executors idle). Rebinding each round's checkpoint through
     * `createDataFrame(ck.rdd, ck.schema)` makes the new frame a true leaf
-    * and holds every round at ~0.4 s (CcProbe `rdd` mode). */
-  private[graft] def ccRebind(df: DataFrame): DataFrame = {
-    val ck = df.localCheckpoint()
-    ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
+    * and holds every round at ~0.4 s (CcProbe `rdd` mode).
+    *
+    * Returns the rebound labeling and its `sum(l)` — the loop's
+    * convergence witness, observed by the pin instead of read by a
+    * separate job. */
+  private[graft] def ccRebind(df: DataFrame): (DataFrame, Long) = {
+    val ck = graft.core.Broadcasts.pin(df, coalesce(sum(col("l")), lit(0L)))
+    (ck.df.sparkSession.createDataFrame(ck.df.rdd, ck.df.schema),
+      ck.extras.getLong(0))
   }
 
   private[graft] def ccDistributed(e: DataFrame, maxIter: Int)
@@ -739,16 +745,13 @@ package object dedup {
     // label0(v) = min(v, min neighbor) — for clique-shaped components
     // (the common near-dup case) this IS the fixpoint, so the loop runs
     // exactly one confirmation round
-    var labels = ccRebind(sym.groupBy(col("a").as("v"))
-      .agg(least(min(col("b")), first(col("a"))).as("l")))
     // labels only ever decrease, so sum(l) is a complete convergence
-    // witness — one cheap aggregate per round instead of a self-join diff
-    var lastSum = labels.agg(coalesce(sum(col("l")), lit(0L))).head().getLong(0)
+    // witness — observed by each round's pin instead of a self-join diff
+    var (labels, lastSum) = ccRebind(sym.groupBy(col("a").as("v"))
+      .agg(least(min(col("b")), first(col("a"))).as("l")))
     var i = 0
     var done = false
-    val ccDebug = sys.env.contains("GRAFT_CC_DEBUG")
     while (!done && i < maxIter) {
-      val tRound = System.nanoTime()
       val nbr = sym.join(labels, sym("b") === labels("v"))
         .groupBy(col("a")).agg(min(col("l")).as("nl"))
       // pointer jumping: L(L(v)). Every label IS a node id (labels start
@@ -764,22 +767,19 @@ package object dedup {
           least(labels("l"),
             least(coalesce(col("nl"), labels("l")),
               coalesce(col("jl"), labels("l")))).as("l"))
-      // checkpoint FIRST, then read the convergence witness off the
-      // materialized frame: evaluating `next` exactly once per round.
-      // (The earlier probe-then-checkpoint order skipped the final
-      // round's materialization but evaluated the three-way join twice
-      // per NON-final round — a loss for every multi-round graph, and
-      // multi-round is precisely when the distributed path matters.)
-      val ck = ccRebind(next)
-      val s = ck.agg(coalesce(sum(col("l")), lit(0L))).head().getLong(0)
+      // the pin evaluates `next` exactly once per round and observes the
+      // convergence witness on the way. (A probe-then-checkpoint order
+      // skipped the final round's materialization but evaluated the
+      // three-way join twice per NON-final round — a loss for every
+      // multi-round graph, and multi-round is precisely when the
+      // distributed path matters.)
+      val (ck, s) = ccRebind(next)
       if (s == lastSum) done = true
       else {
         labels = ck
         lastSum = s
       }
       i += 1
-      if (ccDebug) println(
-        f"[cc-debug] round $i: ${(System.nanoTime() - tRound) / 1e9}%.2f s")
     }
     if (!done) throw new IllegalStateException(
       s"connectedComponents: not converged after $maxIter rounds — " +

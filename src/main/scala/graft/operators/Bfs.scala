@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.Broadcasts
+
 /** Multi-source breadth-first search: exact hop distance from a seed
   * set, the traversal primitive the graph family was missing (PageRank
   * = value propagation, k-core = peeling, label-prop = gossip; BFS =
@@ -18,9 +20,11 @@ import org.apache.spark.sql.functions._
   * Each round's frontier and the accumulated distance frame are
   * localCheckpoint()ed: constant-size lineage, O(1) plan growth per
   * round, and the anti-join probe side is a materialized frame.
-  * Frontiers ≤ 5M rows broadcast explicitly (a checkpointed frame has
-  * no stats, so Spark would otherwise sort-merge the whole edge list
-  * every round — the same reasoning as the k-core dead-set probe).
+  * Frontiers within the broadcast byte budget broadcast explicitly (a
+  * checkpointed frame has no stats, so Spark would otherwise sort-merge
+  * the whole edge list every round — the same reasoning as the k-core
+  * dead-set probe); each hop's pin also counts the new frontier, which
+  * sizes that broadcast and the exit test without a job of its own.
   */
 object Bfs {
 
@@ -39,52 +43,60 @@ object Bfs {
         col(dstCol).cast("long").as("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
       .localCheckpoint() // scanned once per round; pin the blocks
-
-    val hop0 = seeds.select(col(seedCol).cast("long").as("node"))
+    traverse(e, Broadcasts.pin(seeds.select(col(seedCol).cast("long").as("node"))
       .filter(col("node").isNotNull).distinct()
-      .withColumn("dist", lit(0))
-      .localCheckpoint()
-    // the reached set is a K-COMPACTED ACCUMULATOR (r12 verdict #2): a
-    // compacted checkpointed base plus at most `compactEvery` pinned
-    // per-hop frames (disjoint by the anti-join), re-compacted into one
-    // checkpoint every `compactEvery` hops. The r11 spelling re-copied
-    // the WHOLE accumulated set every hop (O(depth * |reached|) writes);
-    // the r12 union-of-all-hops spelling never copied but made hop h's
-    // anti-join probe a union of h frames — plan depth and per-hop probe
-    // overhead grew with the traversal, and the driver measured the
-    // exact faces regressing (q_bfs 0.85x, q_harmonic 0.87x). Compaction
-    // bounds both: probe cost stays flat, and the copy is amortized
-    // 1/compactEvery per hop.
-    val hops = scala.collection.mutable.ArrayBuffer(hop0)
-    def reached(): DataFrame = hops.reduce(_.unionAll(_))
-    var frontier = hop0.select(col("node"))
-    var frontierSize = frontier.count()
+      .withColumn("dist", lit(0))), Seq("node"), maxHops)
+  }
 
+  /** The frontier-delta traversal behind [[distances]] (`key` =
+    * `Seq("node")`) and the per-source faces (`key` =
+    * `Seq("root", "node")`): `hop0` is the pinned dist-0 frame, `e` the
+    * pinned (src, dst) edge frame, and every key column but the last
+    * rides along each hop unchanged.
+    *
+    * The reached set is a K-COMPACTED ACCUMULATOR: a compacted
+    * checkpointed base plus at most `compactEvery` pinned per-hop
+    * frames (disjoint by the anti-join), re-compacted into one
+    * checkpoint every `compactEvery` hops. Re-copying the whole reached
+    * set every hop costs O(depth * |reached|) writes; a union of all hop
+    * frames never copies but grows the anti-join probe (plan depth and
+    * per-hop overhead) with the traversal. Compaction bounds both:
+    * probe cost stays flat, and the copy is amortized 1/compactEvery
+    * per hop. */
+  private def traverse(e: DataFrame, hop0: Broadcasts.Pinned,
+      key: Seq[String], maxHops: Int): DataFrame = {
+    val keyCols = key.map(col)
+    val hops = scala.collection.mutable.ArrayBuffer(hop0.df)
+    def reached(): DataFrame = hops.reduce(_.unionAll(_))
+    var frontier = hop0.df.select(keyCols: _*)
+    var frontierSize = hop0.rows
     var hop = 0
     while (hop < maxHops && frontierSize > 0L) {
       hop += 1
+      val renamed = frontier.withColumnRenamed("node", "src")
       val probe =
-        if (frontierSize <= 5000000L) broadcast(frontier.withColumnRenamed("node", "src"))
-        else frontier.withColumnRenamed("node", "src")
-      val next = e.join(probe, "src")
-        .select(col("dst").as("node")).distinct()
+        if (Broadcasts.fits(frontierSize, renamed.schema)) broadcast(renamed)
+        else renamed
+      // the hop pin counts the new frontier: that count sizes the next
+      // broadcast AND the exit test
+      val next = Broadcasts.pin(e.join(probe, "src")
+        .select(key.init.map(col) :+ col("dst").as("node"): _*).distinct()
         // no join hint: the hop frames are materialized, so AQE re-plans
         // this anti-join from REAL sizes and converts the reached side to
         // a broadcast while it is small (forcing shuffle_hash here
         // measured +1.5s/+2.7s on q_harmonic/q_harmonic_approx)
-        .join(reached().select(col("node")), Seq("node"), "left_anti")
-        .withColumn("dist", lit(hop))
-        .localCheckpoint()
-      frontierSize = next.count() // one action: sizes the broadcast AND the exit test
+        .join(reached().select(keyCols: _*), key, "left_anti")
+        .withColumn("dist", lit(hop)))
+      frontierSize = next.rows
       if (frontierSize > 0L) {
-        hops += next
+        hops += next.df
         // compact only when another hop can follow — a copy right
         // before the final consumption would be pure overhead
         if (hops.size > compactEvery && hop < maxHops) {
           val acc = reached().localCheckpoint()
           hops.clear(); hops += acc
         }
-        frontier = next.select(col("node"))
+        frontier = next.df.select(keyCols: _*)
       }
     }
     reached()
@@ -93,12 +105,12 @@ object Bfs {
   /** Reached-set compaction cadence for the traversals: the anti-join
     * probe side is a union of at most this many pinned frames before it
     * is re-checkpointed into one. Small enough that per-hop probe cost
-    * stays flat at any traversal depth, large enough that shallow graded
-    * traversals (<= 4 hops) NEVER pay a copy — measured isolated at
-    * sf0.1 (warm): a cadence of 2 compacted once at hop 2 and cost
-    * q_bfs 3.06 -> 3.30 s / q_harmonic 3.79 -> 4.01 s vs the r12
-    * union-of-all spelling; at 4 both recover (3.02 / 3.42) and the
-    * deep-traversal probe bound is kept. */
+    * stays flat at any traversal depth, large enough that shallow
+    * traversals never pay a copy (the measured A/B is in
+    * OPTIMIZATION_r13.md, item 2). The graded traversal depths — q_bfs
+    * 4, q_harmonic and q_harmonic_approx 3 — must stay <= compactEvery:
+    * a deeper graded face would compact, pay the copy and move its plan
+    * lockfile entry. */
   private val compactEvery = 4
 
   /** Weighted shortest paths by bounded Bellman-Ford relaxation:
@@ -194,41 +206,10 @@ object Bfs {
   private[graft] def perSourceDistancesPinned(e: DataFrame, seeds: DataFrame,
       maxHops: Int, seedCol: String = "node"): DataFrame = {
     require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
-    val hop0 = seeds.select(col(seedCol).cast("long").as("root"))
+    traverse(e, Broadcasts.pin(seeds.select(col(seedCol).cast("long").as("root"))
       .filter(col("root").isNotNull).distinct()
-      .withColumn("node", col("root")).withColumn("dist", lit(0))
-      .localCheckpoint()
-    // k-compacted accumulator, as in [[distances]]: bounded probe-side
-    // frame count per hop, the O(Σ|reach|) copy paid only once per
-    // `compactEvery` hops (the per-source frame is Σ|reach| rows, which
-    // the r11 every-hop re-checkpoint paid again every hop)
-    val hops = scala.collection.mutable.ArrayBuffer(hop0)
-    def reached(): DataFrame = hops.reduce(_.unionAll(_))
-    var frontier = hop0.select(col("root"), col("node"))
-    var frontierSize = frontier.count()
-    var hop = 0
-    while (hop < maxHops && frontierSize > 0L) {
-      hop += 1
-      val renamed = frontier.withColumnRenamed("node", "src")
-      val probe = if (frontierSize <= 5000000L) broadcast(renamed) else renamed
-      val next = e.join(probe, "src")
-        .select(col("root"), col("dst").as("node")).distinct()
-        .join(reached().select(col("root"), col("node")),
-          Seq("root", "node"), "left_anti")
-        .withColumn("dist", lit(hop))
-        .localCheckpoint()
-      frontierSize = next.count()
-      if (frontierSize > 0L) {
-        hops += next
-        // compact only when another hop can follow (see distances)
-        if (hops.size > compactEvery && hop < maxHops) {
-          val acc = reached().localCheckpoint()
-          hops.clear(); hops += acc
-        }
-        frontier = next.select(col("root"), col("node"))
-      }
-    }
-    reached()
+      .withColumn("node", col("root")).withColumn("dist", lit(0))),
+      Seq("root", "node"), maxHops)
   }
 
   /** Harmonic centrality of each seed within `maxHops`:
@@ -280,16 +261,16 @@ object Bfs {
       .localCheckpoint() // pinned ONCE: feeds N-count + k traversal rounds
     // N over the SYMMETRIC edge list: src covers every node
     val n = e.select(col("src")).distinct().count()
-    val p = pivots.select(col(seedCol).cast("long").as("node"))
-      .filter(col("node").isNotNull).distinct()
-      .localCheckpoint() // feeds k-count + the traversal seed
-    val k = p.count()
+    // pinned: feeds the traversal seed, and the pin counts k
+    val p = Broadcasts.pin(pivots.select(col(seedCol).cast("long").as("node"))
+      .filter(col("node").isNotNull).distinct())
+    val k = p.rows
     require(k > 0, "harmonicEstimate: empty pivot set")
     // the Pinned face reuses the frame pinned above — the public face
     // would copy the whole edge list into block storage a second time
     // (r11 verdict Next #7: the estimate must not cost more than its
     // own traversals)
-    perSourceDistancesPinned(e, p, maxHops)
+    perSourceDistancesPinned(e, p.df, maxHops)
       .filter(col("dist") > 0)
       .groupBy(col("node"))
       .agg(count(lit(1)).as("n_pivots"),

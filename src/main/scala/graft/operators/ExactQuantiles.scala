@@ -281,13 +281,12 @@ object ExactQuantiles {
     // one double per group — but GATED on a counted byte budget (r12
     // advice: group cardinality is unbounded — a near-unique group
     // column would make an unconditional broadcast corpus-sized).
-    // Pin first so the count and the join read the same blocks; above
+    // The pin counts the rows the join then reads as blocks; above
     // the gate, shuffled-hash with the group-sized build side.
     def gated(d: DataFrame): DataFrame = {
-      val pinned = d.localCheckpoint()
-      if (graft.core.Broadcasts.fits(pinned.count(), pinned.schema))
-        broadcast(pinned)
-      else pinned.hint("shuffle_hash")
+      val pinned = graft.core.Broadcasts.pin(d)
+      if (pinned.fits()) broadcast(pinned.df)
+      else pinned.df.hint("shuffle_hash")
     }
     val med = gated(exactQuantilesByGroup(base, "g", "v", Seq(0.5))
       .select(col("g"), col("value").as("med")))
@@ -327,17 +326,17 @@ object ExactQuantiles {
     val base = df.select(col(groupCol).as("g"),
         col(valueCol).cast("double").as("v"))
       .filter(col("v").isNotNull && col("g").isNotNull)
-    val bounds = exactQuantilesByGroup(base, "g", "v", Seq(pLo, pHi))
-      .groupBy(col("g")).agg(
-        min(when(col("prob") === pLo, col("value"))).as("lo"),
-        min(when(col("prob") === pHi, col("value"))).as("hi"))
-      .localCheckpoint() // group-sized; pinned so the gate count is free
+    // group-sized; pinned so the gate count is free
+    val bounds = graft.core.Broadcasts.pin(
+      exactQuantilesByGroup(base, "g", "v", Seq(pLo, pHi))
+        .groupBy(col("g")).agg(
+          min(when(col("prob") === pLo, col("value"))).as("lo"),
+          min(when(col("prob") === pHi, col("value"))).as("hi")))
     // same counted byte-gate as madOutliers (group cardinality is
     // unbounded; an unconditional broadcast would be too)
     val boundsIn =
-      if (graft.core.Broadcasts.fits(bounds.count(), bounds.schema))
-        broadcast(bounds)
-      else bounds.hint("shuffle_hash")
+      if (bounds.fits()) broadcast(bounds.df)
+      else bounds.df.hint("shuffle_hash")
     base.join(boundsIn, "g")
       .withColumn("w", least(greatest(col("v"), col("lo")), col("hi")))
       .groupBy(col("g"))

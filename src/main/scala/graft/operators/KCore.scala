@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.Broadcasts
+
 /** k-core decomposition by iterative peeling — the graph-family density
   * filter of corpus curation: keep only the subgraph where every node
   * retains at least `k` neighbors AFTER every weaker node is removed.
@@ -31,9 +33,9 @@ import org.apache.spark.sql.functions._
   * survivor frame once peeling has bitten); the edge frame is
   * localCheckpointed each round (the d_clusters flat-cost-per-round
   * discipline — the survivor filter references it twice, which would
-  * otherwise double the lineage every round). The per-round driver
-  * action is ONE bounded count on the checkpointed blocks (free read,
-  * no recompute), used only for the convergence test. Rounds are
+  * otherwise double the lineage every round). The convergence test
+  * needs no driver action of its own: each round's degree pin observes
+  * how many nodes fall below k ([[graft.core.Broadcasts.pin]]). Rounds are
   * bounded by the peel depth (the graph's degeneracy ordering length),
   * O(log n) on real-world graphs; `maxRounds` converts a pathological
   * input (a path graph peels one node per round) into an explicit error
@@ -94,8 +96,12 @@ object KCore {
           col("src").isNotNull && col("dst").isNotNull)
         .distinct())
       .localCheckpoint()
-    var deg = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint()
+    // each degree pin also observes how many nodes it leaves below k:
+    // that number is both the exit test and the dead-frontier size
+    def pinDeg(df: DataFrame) = Broadcasts.pin(df,
+      coalesce(sum(when(col("deg") < k, 1L)), lit(0L)))
+    var deg = pinDeg(
+      e.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg")))
     var rounds = 0
     while (true) {
       rounds += 1
@@ -103,31 +109,27 @@ object KCore {
         throw new IllegalStateException(
           s"kCore(k=$k) did not converge in $maxRounds peel rounds — " +
             "raise maxRounds for deep-degeneracy graphs (e.g. long paths)")
-      // referenced twice (count + probe), but BOTH consumers are a
-      // codegen'd filter over the already-pinned degree blocks — the
-      // r12 per-round localCheckpoint here bought nothing and cost one
-      // eager job per peel round (r13 serial-floor pass)
-      val dead = deg.filter(col("deg") < k).select(col("node"))
-      val nDead = dead.count()
-      if (nDead == 0L) return deg
+      val nDead = deg.extras.getLong(0)
+      if (nDead == 0L) return deg.df
       // edges from ANY src into this round's dead set, counted per src:
       // survivors lose exactly these; dead srcs drop out of the join
       // below anyway. One pass over the checkpointed edge blocks — and
       // a checkpointed frame has no stats, so Spark would sort-merge
       // (full edge shuffle per round); the dead frontier is almost
-      // always tiny, so broadcast it explicitly below the same 5M-row
-      // bound Triangles uses, keeping the probe map-side and the edge
-      // frame unshuffled for the whole peel
-      val deadDst = dead.select(col("node").as("dst"))
-      val probe = if (nDead <= 5000000L) broadcast(deadDst) else deadDst
+      // always tiny, so broadcast it explicitly while it fits the byte
+      // budget, keeping the probe map-side and the edge frame
+      // unshuffled for the whole peel. The dead filter is a codegen'd
+      // read of the pinned degree blocks, so it is not pinned itself.
+      val deadDst = deg.df.filter(col("deg") < k).select(col("node").as("dst"))
+      val probe =
+        if (Broadcasts.fits(nDead, deadDst.schema)) broadcast(deadDst) else deadDst
       val dec = e.join(probe, "dst")
         .groupBy(col("src").as("node")).agg(count(lit(1)).as("d"))
-      deg = deg.filter(col("deg") >= k)
+      deg = pinDeg(deg.df.filter(col("deg") >= k)
         .join(dec, Seq("node"), "left")
         .select(col("node"),
-          (col("deg") - coalesce(col("d"), lit(0L))).as("deg"))
-        .localCheckpoint()
+          (col("deg") - coalesce(col("d"), lit(0L))).as("deg")))
     }
-    deg // unreachable
+    deg.df // unreachable
   }
 }

@@ -112,16 +112,14 @@ object LabelProp {
     * (label, n_nodes, in_w, tot_w, contrib_nano). */
   def modularity(edges: DataFrame, labels: DataFrame): DataFrame = {
     // the label frame is node-sized and consumed by BOTH endpoint
-    // attaches: pin it once and gate the broadcast on a counted
-    // byte-budget (the rank-family precedent) — above the gate the
-    // planner falls back to its own choice, below it both attaches are
-    // map-side and the edge frame is never shuffled here at all
-    val lab = labels.select(col("node"), col("label"))
-      .filter(col("node").isNotNull && col("label").isNotNull)
-      .localCheckpoint()
-    val bcastLab = lab.count() <=
-      graft.core.Broadcasts.rowGate(lab.schema)
-    def attach(d: DataFrame): DataFrame = if (bcastLab) broadcast(d) else d
+    // attaches: pin it once and gate the broadcast on the pin's count
+    // against the byte budget (the rank-family precedent) — above the
+    // gate the planner falls back to its own choice, below it both
+    // attaches are map-side and the edge frame is never shuffled here
+    val labPin = graft.core.Broadcasts.pin(labels.select(col("node"), col("label"))
+      .filter(col("node").isNotNull && col("label").isNotNull))
+    val lab = labPin.df
+    def attach(d: DataFrame): DataFrame = if (labPin.fits()) broadcast(d) else d
     // ONE pass over the labeled edge set computes BOTH per-community
     // sums (in_w as a conditional sum inside the tot aggregate), and 2m
     // is the sum of tot_w over the label-sized aggregate — the old

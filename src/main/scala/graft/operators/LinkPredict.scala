@@ -33,6 +33,20 @@ import org.apache.spark.sql.functions._
   */
 object LinkPredict {
 
+  /** The (node, deg) out-degree frame, pinned, and whether it fits the
+    * broadcast byte budget. The degree frame is NODE-sized and feeds
+    * every degree attach: under the gate each attach BROADCASTS — the
+    * wedge-pair frame (the operator's big intermediate: sum(deg) to
+    * sum(deg^2) rows) is then never shuffled just to pick up one long
+    * per endpoint (measured at sf0.1 on the holdout face: the du/dv
+    * attaches were 225 + 297 MB of pair-frame shuffle read); above the
+    * gate, shuffled-hash with the node-sized build. */
+  private def pinnedDegrees(e: DataFrame): (DataFrame, Boolean) = {
+    val deg = graft.core.Broadcasts.pin(
+      e.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg")))
+    (deg.df, deg.fits())
+  }
+
   /** Top-k node pairs by neighborhood Jaccard (ties: smaller (u, v)
     * first). Input must be a SYMMETRIC DISTINCT edge list — both
     * directions of every undirected edge exactly once, no loops (the
@@ -52,19 +66,7 @@ object LinkPredict {
     require(k >= 1, s"k must be >= 1, got $k")
     val e = edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst"))
-    val deg = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint()
-    // the degree frame is NODE-sized: pin it once and COUNT it (the
-    // pageRank broadcastNodeThreshold / toCategorical counted-gate
-    // precedent). Under the gate (row threshold capped by the
-    // 64 MB byte budget, r12 verdict #7) every degree attach BROADCASTS — the
-    // wedge-pair frame (the operator's big intermediate: sum(deg) to
-    // sum(deg^2) rows) is then never shuffled just to pick up one long
-    // per endpoint (measured at sf0.1 on the holdout face: the du/dv
-    // attaches were 225 + 297 MB of pair-frame shuffle read); above the
-    // gate, shuffled-hash with the node-sized build.
-    val useB = deg.count() <=
-      math.min(5000000L, graft.core.Broadcasts.rowGate(deg.schema))
+    val (deg, useB) = pinnedDegrees(e)
     def attach(d: DataFrame): DataFrame =
       if (useB) broadcast(d) else d.hint("shuffle_hash")
 
@@ -124,19 +126,7 @@ object LinkPredict {
     require(kPerQuery >= 1, s"kPerQuery must be >= 1, got $kPerQuery")
     val e = edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst"))
-    val deg = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint()
-    // the degree frame is NODE-sized: pin it once and COUNT it (the
-    // pageRank broadcastNodeThreshold / toCategorical counted-gate
-    // precedent). Under the gate (row threshold capped by the
-    // 64 MB byte budget, r12 verdict #7) every degree attach BROADCASTS — the
-    // wedge-pair frame (the operator's big intermediate: sum(deg) to
-    // sum(deg^2) rows) is then never shuffled just to pick up one long
-    // per endpoint (measured at sf0.1 on the holdout face: the du/dv
-    // attaches were 225 + 297 MB of pair-frame shuffle read); above the
-    // gate, shuffled-hash with the node-sized build.
-    val useB = deg.count() <=
-      math.min(5000000L, graft.core.Broadcasts.rowGate(deg.schema))
+    val (deg, useB) = pinnedDegrees(e)
     def attach(d: DataFrame): DataFrame =
       if (useB) broadcast(d) else d.hint("shuffle_hash")
     val centerDeg = deg.select(col("node").as("dst"), col("deg").as("cdeg"))

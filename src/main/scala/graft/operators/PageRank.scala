@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.core.Broadcasts
 
 /** Distributed PageRank over an edge-list frame — the web-graph quality
   * weight every large pretraining corpus pipeline ends up needing
@@ -36,51 +38,72 @@ import org.apache.spark.sql.functions._
   */
 object PageRank {
 
-  /** Static frames shared by every rank run over one SYMMETRIC edge
-    * list — built once by [[rankStatics]] and threaded into
-    * [[pageRank]] / [[personalizedPageRank]] so a query running BOTH
-    * (the q_ppr_quality shape: PPR vs uniform-PR seed concentration)
-    * pays the out-weight aggregate, the gate count and the edge-sized
+  /** Static frames shared by every rank run over one edge list — built
+    * once by [[rankStatics]] and threaded into [[pageRank]] /
+    * [[personalizedPageRank]] so a query running BOTH (the
+    * q_ppr_quality shape: PPR vs uniform-PR seed concentration) pays
+    * the out-weight aggregate, the node pin and the edge-sized
     * out-weight attach ONCE instead of once per run.
     *
-    *  - `e`     normalized (src, dst, w) long columns
     *  - `outw`  pinned per-src out-weight aggregate (node-sized)
+    *  - `nodes` pinned node frame (one `node` column)
     *  - `eo`    pinned edges-with-out-weight attach (edge-sized)
-    *  - `bcastNodes` the counted-and-byte-gated broadcast decision
-    *  - `nNodes` the node count behind that decision (symmetric
-    *    contract: the node set IS outw's key set) */
-  final case class RankStatics(e: DataFrame, outw: DataFrame,
+    *  - `bcastNodes` the byte-gated broadcast decision for the
+    *    per-round node-sized frames
+    *  - `nNodes` the node count behind that decision, counted by the
+    *    node pin */
+  final case class RankStatics(outw: DataFrame, nodes: DataFrame,
     eo: DataFrame, bcastNodes: Boolean, nNodes: Long)
 
-  /** Effective broadcast row gate: the caller's row threshold capped by
-    * the byte budget for the (long, long) frames the rank loop
-    * broadcasts per round (ranks, contributions, out-weights) — r12
-    * verdict #7: a row count is the wrong unit for a byte-cost
-    * decision. 64 MB / ~48 B per row ≈ 1.4M rows, so the byte cap binds
-    * below the legacy 5M default. */
-  private[operators] def nodeGate(threshold: Long, schema: org.apache.spark.sql.types.StructType): Long =
-    math.min(threshold, graft.core.Broadcasts.rowGate(schema))
-
-  /** Build [[RankStatics]] for a symmetric edge list (the
-    * [[coOccurrenceEdges]] contract). `edges` should be pinned by the
-    * caller when it is a computed frame — the aggregate and attach here
-    * each scan it once. */
-  def rankStatics(edges: DataFrame,
-      broadcastNodeThreshold: Long = 5000000L): RankStatics = {
+  /** Build [[RankStatics]] for `edges` (src, dst, w). `edges` should be
+    * pinned by the caller when it is a computed frame — the aggregate,
+    * the node frame and the attach here each scan it once.
+    *
+    * `symmetric = true` asserts every node occurs as a src (the
+    * [[coOccurrenceEdges]] contract: each in-edge has its mirror), so
+    * the node frame IS the out-weight frame's key set — the
+    * union+distinct over both endpoint columns (a second full edge pass
+    * + a 2x-edge exchange) collapses into a projection of the pinned
+    * aggregate. Identical node set by construction. */
+  def rankStatics(edges: DataFrame, symmetric: Boolean): RankStatics = {
     val e = edges.select(col("src").cast("long").as("src"),
       col("dst").cast("long").as("dst"), col("w").cast("long").as("w"))
+    // the out-weight aggregate is NODE-sized: pinned first, because it
+    // feeds everything (the edge attach, the node frame, the dangling
+    // probe) — one aggregation instead of one per consumer
     val outw = e.groupBy(col("src")).agg(sum(col("w")).as("out_w"))
       .localCheckpoint()
-    val nNodes = outw.count() // symmetric: node set == out-weight key set
-    val bcastNodes = nNodes <= nodeGate(broadcastNodeThreshold, outw.schema)
-    // lineage break: see pageRank's eoPin
+    val nodes = Broadcasts.pin(
+      if (symmetric) outw.select(col("src").as("node"))
+      else e.select(col("src").as("node"))
+        .union(e.select(col("dst").as("node"))).distinct())
+    // one broadcast decision for every per-round frame (ranks,
+    // contributions, out-weights — all (long, long)): the pinned node
+    // count against the byte budget (r12 verdict #7: a row count is the
+    // wrong unit for a byte-cost decision)
+    val bcastNodes = nodes.fits(outw.schema)
+    // out-weight attach under the SAME gate: broadcast means the pinned
+    // edge frame is built map-only over the edge aggregate's output —
+    // no edge-sized exchange anywhere in the prelude; above the gate,
+    // shuffled-hash (node-sized per-partition build, no sorts). Pinned
+    // ONCE: exchange reuse does not cover the weight aggregate /
+    // out-weight join ABOVE the exchange, which otherwise re-executes
+    // in every round's stage.
+    // LINEAGE BREAK (r12 verdict #1): outw derives FROM e, and its
+    // checkpointed LogicalRDD keeps e's `src` exprId — the analyzer's
+    // DeduplicateRelations cannot re-alias a LogicalRDD that is not a
+    // duplicate relation, so the self-referential join threw
+    // [INTERNAL_ERROR] "conflicting references in Join" under the
+    // adversarial config matrix. Fresh alias on the build-side key
+    // (new exprId by construction) makes the join unambiguous under
+    // every config; same rows, one extra column dropped.
     val outwB = outw.select(col("src").as("ow_src"), col("out_w"))
     val eo = e.join(
         if (bcastNodes) broadcast(outwB) else outwB.hint("shuffle_hash"),
         col("src") === col("ow_src"))
       .drop("ow_src")
       .localCheckpoint()
-    RankStatics(e, outw, eo, bcastNodes, nNodes)
+    RankStatics(outw, nodes.df, eo, bcastNodes, nodes.rows)
   }
 
   /** Directed co-occurrence edges from a fact table: one edge (src, dst,
@@ -200,66 +223,56 @@ object PageRank {
     * and pays one node-sized self-join + 1-row max aggregate — eager
     * rounds instead of one lazy plan, so leave the default `-1`
     * (disabled, single lazy plan) when the round count is small and
-    * known. Executed round count is reported on stderr. */
+    * known. */
   def pageRank(edges: DataFrame, iterations: Int, scale: Long = 1000000000L,
       dampNum: Int = 85, dampDen: Int = 100, handleDangling: Boolean = true,
       stageEvery: Int = 0, tolUnits: Long = -1L,
       symmetric: Boolean = false,
-      broadcastNodeThreshold: Long = 5000000L,
       statics: Option[RankStatics] = None): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
-    require(statics.isEmpty || symmetric,
-      "pre-built RankStatics carry the symmetric contract")
-    val e = statics.map(_.e).getOrElse(
-      edges.select(col("src").cast("long").as("src"),
-        col("dst").cast("long").as("dst"), col("w").cast("long").as("w")))
-    // the out-weight aggregate is NODE-sized: pinned first, because it
-    // feeds everything (the edge attach, the node frame, the dangling
-    // probe) — one aggregation instead of one per consumer
-    val outw = statics.map(_.outw).getOrElse(
-      e.groupBy(col("src")).agg(sum(col("w")).as("out_w"))
-        .localCheckpoint())
-    // `symmetric = true` asserts every node occurs as a src (the
-    // coOccurrenceEdges contract: each in-edge has its mirror), so the
-    // node frame IS the out-weight frame's key set — the union+distinct
-    // over both endpoint columns (a second full edge pass + a 2x-edge
-    // exchange) collapses into a projection of the pinned aggregate.
-    // Identical node set by construction.
-    val nodes =
-      if (symmetric) outw.select(col("src").as("node"))
-      else e.select(col("src").as("node"))
-        .union(e.select(col("dst").as("node"))).distinct()
+    // the static frames are PINNED for the lazy path too: ReuseExchange
+    // only shares the shuffle FILES — everything above the reused
+    // exchange (the edge-weight final aggregate, the out-weight join,
+    // the node projection) re-executed in EVERY round's stage, and for
+    // a computed edge frame that re-aggregation is the per-round cost
+    // floor (measured at sf0.1: each of q_ppr's round stages carried
+    // ~8 core-s re-running the 2.4M-entry weight aggregate it read
+    // through the reused exchange). One edge-sized + one node-sized
+    // materialization — the same price the convergence path, KCore and
+    // Bfs already pay — and every round becomes a block read.
+    val RankStatics(outw, nodesPin, eoPin, bcastNodes, nNodes) =
+      statics.getOrElse(rankStatics(edges, symmetric))
     // static over iterations: nodes with no out-edge (dangling); the
-    // node count is the LITERAL the gate already counted (r12 verdict
-    // #6: the old spelling paid a per-round 1-row aggregate + broadcast
-    // cross for a number the loop had already computed)
-    lazy val dangNodes = nodes.join(outw, nodes("node") === outw("src"), "left_anti")
+    // node count is the LITERAL the node pin already counted (r12
+    // verdict #6: the old spelling paid a per-round 1-row aggregate +
+    // broadcast cross for a number the loop had already computed)
+    lazy val dangPin = nodesPin
+      .join(outw, nodesPin("node") === outw("src"), "left_anti")
+      .localCheckpoint()
     val teleport = (dampDen - dampNum).toLong * scale / dampDen
 
-    def roundOn(eoF: DataFrame, nodesF: DataFrame, dangF: => DataFrame,
-        nNodes: Long, bcastNodes: Boolean)(ranks: DataFrame): DataFrame = {
-      // Join strategy per round, by a COUNTED gate (the toCategorical /
-      // Bfs-frontier precedent, threshold [[broadcastNodeThreshold]]):
-      //  - node frame small enough (any graph this side of ~5M nodes):
-      //    BROADCAST the rank/contrib frames — the pinned edge frame is
-      //    then read as blocks with NO exchange at all, and the only
-      //    per-round shuffle is the map-combined (dst, c) partial frame
-      //    (measured at sf0.1: each round stage had been re-reading a
-      //    38 MB edge exchange; broadcast rounds move ~1% of that).
+    def round(ranks: DataFrame): DataFrame = {
+      // Join strategy per round, by the byte-gated node count:
+      //  - node frame small enough: BROADCAST the rank/contrib frames —
+      //    the pinned edge frame is then read as blocks with NO exchange
+      //    at all, and the only per-round shuffle is the map-combined
+      //    (dst, c) partial frame (measured at sf0.1: each round stage
+      //    had been re-reading a 38 MB edge exchange; broadcast rounds
+      //    move ~1% of that).
       //  - above the gate: shuffled-hash with the node-sized build side
       //    (no per-round sorts; partition count scales with the corpus,
       //    so the per-partition build stays bounded at any size).
       val ranksIn =
         if (bcastNodes) broadcast(ranks) else ranks.hint("shuffle_hash")
-      val contrib = eoF.join(ranksIn, eoF("src") === ranks("node"))
+      val contrib = eoPin.join(ranksIn, eoPin("src") === ranks("node"))
         .groupBy(col("dst"))
         .agg(sum(expr("(pr DIV out_w) * w")).as("c"))
       val contribIn =
         if (bcastNodes) broadcast(contrib) else contrib.hint("shuffle_hash")
-      val base = nodesF.join(contribIn,
-        nodesF("node") === contrib("dst"), "left")
+      val base = nodesPin.join(contribIn,
+        nodesPin("node") === contrib("dst"), "left")
       if (handleDangling) {
-        val dang = ranks.join(dangF, "node", "left_semi")
+        val dang = ranks.join(dangPin, "node", "left_semi")
           .agg(coalesce(sum(col("pr")), lit(0L)).as("dsum"))
         base.crossJoin(broadcast(dang))
           .select(col("node"),
@@ -271,47 +284,6 @@ object PageRank {
           (lit(teleport) +
             expr(s"$dampNum * coalesce(c, 0) DIV $dampDen")).as("pr"))
     }
-    // the static frames are PINNED for the lazy path too: ReuseExchange
-    // only shares the shuffle FILES — everything above the reused
-    // exchange (the edge-weight final aggregate, the out-weight join,
-    // the node projection) re-executed in EVERY round's stage, and for
-    // a computed edge frame that re-aggregation is the per-round cost
-    // floor (measured at sf0.1: each of q_ppr's round stages carried
-    // ~8 core-s re-running the 2.4M-entry weight aggregate it read
-    // through the reused exchange). One edge-sized + one node-sized
-    // materialization — the same price the convergence path, KCore and
-    // Bfs already pay — and every round becomes a block read.
-    val nodesPin = nodes.localCheckpoint()
-    lazy val dangPin = dangNodes.localCheckpoint()
-    // counted broadcast gate (one free count of the pinned node frame),
-    // capped by the BYTE budget for the per-round (long, long) frames
-    // (r12 verdict #7) — or inherited from the shared statics. The same
-    // count doubles as the dangling-mass divisor (verdict #6).
-    val nNodes = statics.map(_.nNodes).getOrElse(nodesPin.count())
-    val bcastNodes = statics.map(_.bcastNodes).getOrElse(
-      nNodes <= nodeGate(broadcastNodeThreshold, outw.schema))
-    // out-weight attach under the SAME gate: broadcast means the pinned
-    // edge frame is built map-only over the edge aggregate's output —
-    // no edge-sized exchange anywhere in the prelude; above the gate,
-    // shuffled-hash (node-sized per-partition build, no sorts).
-    // LINEAGE BREAK (r12 verdict #1): outw derives FROM e, and its
-    // checkpointed LogicalRDD keeps e's `src` exprId — the analyzer's
-    // DeduplicateRelations cannot re-alias a LogicalRDD that is not a
-    // duplicate relation, so the self-referential join threw
-    // [INTERNAL_ERROR] "conflicting references in Join" under the
-    // adversarial config matrix. Fresh alias on the build-side key
-    // (new exprId by construction) makes the join unambiguous under
-    // every config; same rows, one extra column dropped.
-    val eoPin = statics.map(_.eo).getOrElse {
-      val outwB = outw.select(col("src").as("ow_src"), col("out_w"))
-      e.join(
-          if (bcastNodes) broadcast(outwB) else outwB.hint("shuffle_hash"),
-          col("src") === col("ow_src"))
-        .drop("ow_src")
-        .localCheckpoint()
-    }
-    def round(ranks: DataFrame): DataFrame =
-      roundOn(eoPin, nodesPin, dangPin, nNodes, bcastNodes)(ranks)
 
     var ranks = nodesPin.select(col("node"), lit(scale).as("pr"))
     if (tolUnits >= 0L) {
@@ -327,12 +299,11 @@ object PageRank {
       // convergence face cost 2.2x the fixed-round face for the same 6
       // rounds). Checkpoint the static frames ONCE; rounds then re-read
       // blocks instead of recomputing lineage.
-      def roundCk(ranks: DataFrame): DataFrame = round(ranks)
       ranks = nodesPin.select(col("node"), lit(scale).as("pr")).localCheckpoint()
       var i = 0
       var converged = false
       while (i < iterations && !converged) {
-        val next = roundCk(ranks).localCheckpoint()
+        val next = round(ranks).localCheckpoint()
         i += 1
         // the convergence probe exists to SKIP later rounds; after the
         // final round there is nothing left to skip, so the node-sized
@@ -351,14 +322,9 @@ object PageRank {
             .agg(coalesce(max(abs(col("n.pr") - col("o.pr"))), lit(0L)))
             .head().getLong(0)
           converged = diff <= tolUnits
-          if (converged) System.err.println(
-            s"[pageRank] converged after $i of $iterations rounds " +
-              s"(max |r'-r| = $diff <= tolUnits=$tolUnits)")
         }
         ranks = next
       }
-      if (!converged) System.err.println(
-        s"[pageRank] ran all $iterations rounds without hitting tolUnits=$tolUnits")
       ranks
     } else {
       for (i <- 1 to iterations) {
@@ -392,23 +358,12 @@ object PageRank {
       iterations: Int, scale: Long = 1000000000L, dampNum: Int = 85,
       dampDen: Int = 100, seedCol: String = "node",
       symmetric: Boolean = false,
-      broadcastNodeThreshold: Long = 5000000L,
       statics: Option[RankStatics] = None): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
-    require(statics.isEmpty || symmetric,
-      "pre-built RankStatics carry the symmetric contract")
-    val e = statics.map(_.e).getOrElse(
-      edges.select(col("src").cast("long").as("src"),
-        col("dst").cast("long").as("dst"), col("w").cast("long").as("w")))
-    val outw = statics.map(_.outw).getOrElse(
-      e.groupBy(col("src")).agg(sum(col("w")).as("out_w"))
-        .localCheckpoint()) // node-sized; feeds the edge attach AND the node frame
-    // same contract as [[pageRank]]'s `symmetric`: node set == out-weight
-    // key set, skipping the union+distinct second edge pass
-    val nodes =
-      if (symmetric) outw.select(col("src").as("node"))
-      else e.select(col("src").as("node"))
-        .union(e.select(col("dst").as("node"))).distinct()
+    // same statics as [[pageRank]]: the pinned node frame, the gate and
+    // the pinned out-weight attach (`symmetric` as in [[rankStatics]])
+    val RankStatics(_, nodes, eo, bcastNodes, _) =
+      statics.getOrElse(rankStatics(edges, symmetric))
     val s = seeds.select(col(seedCol).cast("long").as("node")).distinct()
       .join(nodes.hint("shuffle_hash"), "node", "left_semi")
     val counts = nodes.agg(count(lit(1)).as("n_nodes"))
@@ -431,26 +386,6 @@ object PageRank {
           expr(s"$teleBase * n_nodes DIV n_seeds")).otherwise(lit(0L))
           .as("tele"))
       .localCheckpoint()
-    // counted broadcast gate as in [[pageRank]] (tele is the node frame,
-    // already pinned — the count reads blocks), byte-capped (verdict #7)
-    // — or inherited from the shared statics
-    val bcastNodes = statics.map(_.bcastNodes).getOrElse(
-      tele.count() <= nodeGate(broadcastNodeThreshold, tele.schema))
-    // Pinned ONCE for the same reason as pageRank's eoPin: exchange reuse
-    // does not cover the weight aggregate / out-weight join ABOVE the
-    // exchange, which otherwise re-executes in every round's stage. The
-    // attach itself is gated like the rounds: broadcast under the node
-    // threshold (map-only pin build, no edge exchange), shuffled-hash above.
-    // Same lineage break as pageRank's eoPin: outw's checkpointed frame
-    // keeps e's `src` exprId, so the build side gets a fresh-aliased key.
-    val eo = statics.map(_.eo).getOrElse {
-      val outwB = outw.select(col("src").as("ow_src"), col("out_w"))
-      e.join(
-          if (bcastNodes) broadcast(outwB) else outwB.hint("shuffle_hash"),
-          col("src") === col("ow_src"))
-        .drop("ow_src")
-        .localCheckpoint()
-    }
     def round(ranks: DataFrame): DataFrame = {
       val ranksIn =
         if (bcastNodes) broadcast(ranks) else ranks.hint("shuffle_hash")

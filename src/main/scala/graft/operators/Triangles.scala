@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.Broadcasts
+
 /** Distributed triangle counting over an edge list — the graph-quality
   * primitive behind clustering-coefficient document/domain scoring and
   * community density checks in web-scale corpus curation. The reference
@@ -37,8 +39,8 @@ object Triangles {
     * ((deg, node)) rather than an encoded single key — no overflow
     * contract to carry, and it replays verbatim in ANSI SQL.
     *
-    * Plan pick — one FREE probe (a count of the localCheckpointed
-    * canonical edge set) chooses how the closure runs:
+    * Plan pick — one FREE probe (the edge count the pin of the
+    * canonical edge set observes) chooses how the closure runs:
     *
     *  - SMALL (edge count below `broadcastEdgeThreshold`, default 5M ≈
     *    40 MiB of adjacency payload): per-edge NEIGHBORHOOD
@@ -74,14 +76,14 @@ object Triangles {
     * gone, localCheckpointed (the d_clusters/sim_kmeans lineage
     * discipline): it feeds FOUR consumers (degree agg, the orientation
     * join's edge side, and — for a computed input like a co-occurrence
-    * frame — everything upstream would otherwise re-run per branch and
-    * once more for the plan-pick probe). Materializing it once makes
-    * every branch a narrow read of shuffle-partitioned blocks and the
-    * probe count free. Edge-sized and partition-parallel — the same
+    * frame — everything upstream would otherwise re-run per branch).
+    * Materializing it once makes every branch a narrow read of
+    * shuffle-partitioned blocks, and the pin counts the edges for the
+    * plan-pick probe. Edge-sized and partition-parallel — the same
     * cost any multi-pass graph algorithm pays, disk-backed at scale. */
   private def canonical(edges: DataFrame, srcCol: String,
       dstCol: String): (DataFrame, Long) = {
-    val e = edges.select(
+    val e = Broadcasts.pin(edges.select(
         least(col(srcCol), col(dstCol)).cast("long").as("a"),
         greatest(col(srcCol), col(dstCol)).cast("long").as("b"))
       .filter(col("a") =!= col("b"))
@@ -93,9 +95,8 @@ object Triangles {
       // aggregate (see its scaladoc; measured there)
       .repartition(edges.sparkSession.sessionState.conf.numShufflePartitions,
         col("a"), col("b"))
-      .distinct()
-      .localCheckpoint()
-    (e, e.count()) // count is free: it reads the checkpointed blocks
+      .distinct())
+    (e.df, e.rows)
   }
 
   private def degrees(e: DataFrame): DataFrame =
@@ -105,14 +106,14 @@ object Triangles {
 
   /** Degree frame pinned once (node-sized): it feeds BOTH orientation
     * attaches here and, for [[clusteringCoefficient]], the coefficient
-    * join — one aggregation instead of one per consumer, and the gate
-    * count below reads blocks. */
-  private def degreesPinned(e: DataFrame): DataFrame =
-    degrees(e).localCheckpoint()
+    * join — one aggregation instead of one per consumer, and the pin
+    * counts it for the gate below. */
+  private def degreesPinned(e: DataFrame): Broadcasts.Pinned =
+    Broadcasts.pin(degrees(e))
 
   private def countsFromCanonical(e: DataFrame, m: Long,
       broadcastEdgeThreshold: Long,
-      degPin: DataFrame): DataFrame = {
+      degPin: Broadcasts.Pinned): DataFrame = {
     // degree attaches under a counted byte-gate (the LinkPredict/rank
     // precedent, r13): BROADCAST the node-sized degree frame on both
     // attaches — the canonical edge frame is then never exchanged just
@@ -121,12 +122,12 @@ object Triangles {
     // broadcasts the only edge-sized exchange left in the whole plan is
     // the u-keyed orientation repartition below). Above the gate,
     // shuffled-hash with the node-sized build side as before (no sorts).
-    val useB = degPin.count() <= graft.core.Broadcasts.rowGate(degPin.schema)
+    val useB = degPin.fits()
     def attach(d: DataFrame): DataFrame =
       if (useB) broadcast(d) else d.hint("shuffle_hash")
     val withDeg = e
-      .join(attach(degPin.select(col("node").as("a"), col("deg").as("da"))), "a")
-      .join(attach(degPin.select(col("node").as("b"), col("deg").as("db"))), "b")
+      .join(attach(degPin.df.select(col("node").as("a"), col("deg").as("da"))), "a")
+      .join(attach(degPin.df.select(col("node").as("b"), col("deg").as("db"))), "b")
     // orient low (deg, node) -> high; carry the HIGH endpoint's degree so
     // the wedge join can order its two spokes without another deg join
     val lowFirst = col("da") < col("db") ||
@@ -245,11 +246,11 @@ object Triangles {
     // both orientation joins and the plan-pick probe (same reasoning as
     // canonical()); sampling by hash of the CANONICAL pair keeps the
     // decision direction-independent
-    val samp = e.filter(
-        pmod(xxhash64(col("a"), col("b")), lit(1000000L)) < lit(pPpm))
-      .localCheckpoint()
-    val ms = samp.count()
-    countsFromCanonical(samp, ms, broadcastEdgeThreshold, degreesPinned(samp))
+    val samp = Broadcasts.pin(e.filter(
+        pmod(xxhash64(col("a"), col("b")), lit(1000000L)) < lit(pPpm)))
+    val ms = samp.rows
+    countsFromCanonical(samp.df, ms, broadcastEdgeThreshold,
+      degreesPinned(samp.df))
       .agg((sum(col("triangles")) / 3).cast("long").as("tri_sampled"))
       .select(lit(m).as("n_edges"), lit(ms).as("n_edges_sampled"),
         coalesce(col("tri_sampled"), lit(0L)).as("tri_sampled"),
@@ -298,7 +299,7 @@ object Triangles {
     // the shared exchange per consumer)
     val degPin = degreesPinned(e)
     val tri = countsFromCanonical(e, m, broadcastEdgeThreshold, degPin)
-    degPin.filter(col("deg") >= 2)
+    degPin.df.filter(col("deg") >= 2)
       .join(tri, Seq("node"), "left")
       .select(col("node"), col("deg"),
         coalesce(col("triangles"), lit(0L)).as("triangles"))

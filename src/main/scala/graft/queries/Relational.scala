@@ -542,10 +542,10 @@ object Relational {
             sum(when(col("is_seed").isNotNull, 1L).otherwise(0L)).as("ns"))
           .select(col("ns"), expr("sm DIV (tot DIV 1000000)").as(out))
       // ONE rank-statics build feeds both runs (r12 verdict #4): the
-      // out-weight aggregate, the gate count and the edge-sized
+      // out-weight aggregate, the node pin and the edge-sized
       // out-weight attach are identical for PPR and uniform PR — the
       // query used to pay each twice.
-      val statics = Some(PageRank.rankStatics(edges))
+      val statics = Some(PageRank.rankStatics(edges, symmetric = true))
       val ppr = seedShare(
         PageRank.personalizedPageRank(edges, seeds, iterations = 6,
         symmetric = true, statics = statics),

@@ -1,13 +1,15 @@
 package graft
 
+import org.apache.spark.JobCount
+import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructType}
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Unit pin for the byte-based broadcast gate (r12 verdict #7): the
   * decision function's constants are derived from schema width and the
   * 64 MB budget, and stay where the rank/link-predict/quantile gates
-  * expect them. */
-class BroadcastGateSpec extends AnyFunSuite {
+  * expect them. Also pins [[graft.core.Broadcasts.pin]], the primitive
+  * that sizes those gates off the pin's own jobs. */
+class BroadcastGateSpec extends SparkSuite {
   import graft.core.Broadcasts
 
   private val twoLongs =
@@ -30,5 +32,46 @@ class BroadcastGateSpec extends AnyFunSuite {
     // the point of verdict #7: 5M (long, long) rows would be ~240 MB
     // built — the byte budget must refuse that long before 5M
     assert(Broadcasts.rowGate(twoLongs) < 5000000L)
+  }
+
+  /** A shuffled (k, v) frame with `n` input rows, fresh per call. */
+  private def grouped(n: Long) =
+    spark.range(0L, n).select((col("id") % 37).as("k"), col("id").as("v"))
+      .groupBy(col("k")).agg(sum(col("v")).as("v"))
+
+  test("pin: observed rows equal count() on a non-empty and an empty frame") {
+    for (n <- Seq(1000L, 0L)) {
+      val p = Broadcasts.pin(grouped(n), coalesce(sum(col("v")), lit(-1L)))
+      assert(p.rows === grouped(n).count())
+      assert(p.rows === p.df.count())
+      assert(p.extras.getLong(0) ===
+        (if (n == 0L) -1L else (0L until n).sum))
+      assert(p.fits() === Broadcasts.fits(p.rows, p.df.schema))
+    }
+    // a filter over an already-pinned frame (no shuffle of its own)
+    val base = Broadcasts.pin(grouped(1000L))
+    assert(Broadcasts.pin(base.df.filter(col("k") < 5)).rows === 5L)
+  }
+
+  test("pin: runs no job beyond the checkpoint's own") {
+    val plain = JobCount(spark.sparkContext) {
+      grouped(1000L).localCheckpoint(): Unit
+    }
+    val pinned = JobCount(spark.sparkContext) {
+      Broadcasts.pin(grouped(1000L), max(col("v"))): Unit
+    }
+    assert(plain > 0 && pinned === plain)
+  }
+
+  test("pin: an observation the checkpoint did not fill throws, runs no job") {
+    // a lazy checkpoint runs nothing, so the observed aggregate would
+    // read as the empty-input value; the pin must refuse it rather than
+    // wait for it or count the frame itself
+    val jobs = JobCount(spark.sparkContext) {
+      intercept[IllegalStateException] {
+        Broadcasts.pinWith(spark.range(0L, 100L).toDF("k"), Nil, eager = false)
+      }: Unit
+    }
+    assert(jobs === 0)
   }
 }

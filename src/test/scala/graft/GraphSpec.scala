@@ -75,21 +75,25 @@ class GraphSpec extends SparkSuite {
     val cyc = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 1L))
     val edges = (cyc ++ cyc.map(_.swap)).map { case (s, d) => (s, d, 1L) }
       .toDF("src", "dst", "w")
-    val errBuf = new java.io.ByteArrayOutputStream()
-    val realErr = System.err
-    val early = try {
-      System.setErr(new java.io.PrintStream(errBuf, true))
-      collectMap[Long, Long](
-        PageRank.pageRank(edges, 30, handleDangling = false, tolUnits = 0L))
-    } finally System.setErr(realErr)
+    val early = collectMap[Long, Long](
+      PageRank.pageRank(edges, 30, handleDangling = false, tolUnits = 0L))
     val full = collectMap[Long, Long](
       PageRank.pageRank(edges, 30, handleDangling = false))
     assert(early == full, "early-exit must be bit-identical to the full run")
     // probes run every SECOND round (r13 serial-floor cut), so the
     // round-1 fixpoint is detected after round 2 — round 2 is identity
-    // (hence the bit-identity assert above), and rounds 3..30 skip
-    assert(errBuf.toString.contains("converged after 2 of 30 rounds"),
-      s"expected round-2 convergence detection, stderr: ${errBuf.toString}")
+    // (hence the bit-identity assert above), and rounds 3..30 skip. The
+    // eager rounds are jobs: a 30-round request must run exactly the
+    // jobs of a 3-round one, which probes once after round 2 (a run
+    // past that probe would pin rounds 3 and 4 and probe again), and
+    // that probe is the 3-round run's only job beyond a 2-round run's
+    def jobs(iterations: Int): Int = org.apache.spark.JobCount(spark.sparkContext) {
+      PageRank.pageRank(edges, iterations, handleDangling = false,
+        tolUnits = 0L): Unit
+    }
+    val (j2, j3, j30) = (jobs(2), jobs(3), jobs(30))
+    assert(j30 == j3 && j3 > j2,
+      s"expected round-2 convergence detection, jobs(2, 3, 30) = ($j2, $j3, $j30)")
     // non-fixpoint graph: the checked path must still match the lazy path
     // round for round even when it never converges inside the budget
     val star = Seq((1L, 2L, 1L)).toDF("src", "dst", "w")
@@ -415,6 +419,26 @@ class GraphSpec extends SparkSuite {
     val per = Bfs.perSourceDistances(edges, Seq(1L, 9L).toDF("node"), 8)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getInt(2)).toMap
     assert(per((1L, 9L)) == 8 && per((9L, 1L)) == 8 && per((1L, 5L)) == 4)
+  }
+
+  test("pin sizing: peel rounds and hops run no count job of their own") {
+    import graft.operators.{Bfs, KCore}
+    import org.apache.spark.JobCount
+    // the kCore pendant chain (3 peel rounds + the fixpoint round) and
+    // the 9-node Bfs path (8 hops + the empty one, 2 compactions): each
+    // round's size is observed by its pin, so the eager build runs only
+    // the pins' own jobs — a count() after each pin would add 2 jobs
+    // per peel round or hop
+    val chain = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L),
+        (5L, 6L), (2L, 1L), (1L, 1L), (5L, 4L))
+      .toDF("src", "dst")
+    val path = sym((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L),
+      (6L, 7L), (7L, 8L), (8L, 9L))
+    val kcoreJobs = JobCount(spark.sparkContext) { KCore.kCore(chain, 2): Unit }
+    val bfsJobs = JobCount(spark.sparkContext) {
+      Bfs.distances(path, Seq(1L).toDF("node"), maxHops = 20): Unit
+    }
+    assert((kcoreJobs, bfsJobs) == ((17, 46)))
   }
 
   test("modularity: two-triangle hand graph; restriction to labeled subgraph") {
